@@ -21,7 +21,7 @@ def test_constraint_suite_on_docs(spark):
     )
     suite = ConstraintSuite(
         [
-            Unique("doc_id", salt=8),
+            Unique("doc_id"),
             References(
                 column="media_ref", ref=catalog, ref_column="media_ref",
                 explode_from="spans",

@@ -43,12 +43,18 @@ def test_filter_pushdown_reaches_scan(spark, lineitem):
 
 
 def test_referential_join_broadcasts_small_ref(spark, lineitem):
+    from valideer_spark.constraints import References
     from valideer_spark.operators import orphan_keys
 
     part = spark.read.parquet(os.path.join(TESTDATA, "part.parquet"))
-    q = orphan_keys(lineitem, "l_partkey", part, "p_partkey")
-    plan = _plan(q)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    # no broadcast hint anywhere: the planner picks the broadcast for a
+    # small reference, both for the operator and the constraint built on it
+    for q in (
+        orphan_keys(lineitem, "l_partkey", part, "p_partkey"),
+        References("l_partkey", part, "p_partkey").violations(lineitem),
+    ):
+        plan = _plan(q)
+        assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
 
 
 def test_flagship_predicate_is_codegen(spark):
@@ -139,4 +145,4 @@ def test_lsh_candidates_capped_plan_is_bounded_and_join_free(spark):
     # exchange of its own); the initial plan prints the window subtree
     # once per union branch (cold + hot) — identical subtrees that
     # exchange reuse collapses at runtime — so at most those two appear
-    assert plan.count("Exchange hashpartitioning(bucket") <= 2, plan
+    assert 1 <= plan.count("Exchange hashpartitioning(bucket") <= 2, plan

@@ -67,7 +67,7 @@ def verdict_df(variant):
         df = spark.read.parquet("{BUCKETED}")
     else:
         df = spark.read.parquet("{PLAIN}")
-    ann = plan.check(df, adapt=False, violations=True)
+    ann = plan.check(df, adapt=False)
     if variant == "global":
         return ann.agg(
             F.count(F.lit(1)).alias("n_docs"),

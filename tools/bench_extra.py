@@ -90,7 +90,7 @@ def bench_frames(spark):
         "flagship_fastpath": docs.select(
             F.sum(plan.is_valid_col(docs).cast("long"))
         ),
-        "uniqueness_salted": duplicate_keys(docs, "doc_id", salt=16),
+        "uniqueness_salted": duplicate_keys(docs, "doc_id"),
         "referential_media": orphan_keys(refs, "media_ref", catalog, "media_ref"),
         "stats_lineitem": column_profile(
             li, ["l_quantity", "l_extendedprice", "l_discount", "l_tax", "l_partkey"]

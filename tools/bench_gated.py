@@ -7,7 +7,9 @@ driver measurement), so this wrapper is the builder-side protocol:
     kernel_before -> bench.py -> kernel_after
 
 window_stable = kernel drift < 15% (same gate as tools/dedup_bench.py).
-Prints one JSON line combining bench.py's output with the bracket.
+Prints one JSON line combining bench.py's output with the bracket. If
+bench.py fails (non-zero exit or no JSON line), ``bench`` carries an
+``error`` field instead and this script exits 1.
 """
 
 from __future__ import annotations
@@ -17,7 +19,9 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(TOOLS)
+sys.path.insert(0, TOOLS)
 
 
 def main() -> None:
@@ -27,7 +31,7 @@ def main() -> None:
     k_before = kernel_rate()
     env = dict(os.environ)
     proc = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, os.path.join(REPO, "bench.py")],
         capture_output=True,
         text=True,
         env=env,
@@ -35,7 +39,13 @@ def main() -> None:
     )
     k_after = kernel_rate()
     lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
-    bench = json.loads(lines[-1]) if lines else {"error": proc.stderr[-1000:]}
+    if proc.returncode == 0 and lines:
+        bench = json.loads(lines[-1])
+    else:
+        bench = {
+            "error": "bench.py exited %d" % proc.returncode,
+            "stderr": proc.stderr[-1000:],
+        }
     drift = round(1.0 - min(k_before, k_after) / max(k_before, k_after), 3)
     out = {
         "bench": bench,
@@ -45,6 +55,8 @@ def main() -> None:
         "window_stable": drift < 0.15,
     }
     print(json.dumps(out))
+    if "error" in bench:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

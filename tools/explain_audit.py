@@ -69,9 +69,8 @@ def main() -> None:
          orphan_keys(li, "l_partkey", part.filter(F.col("p_partkey") % 7 != 0),
                      "p_partkey")),
         ("Uniqueness (single-phase hash agg — COUNT partial-aggregates"
-         " map-side, so the salted two-phase plan was removed in round 6;"
-         " salt args route here too)",
-         duplicate_keys(docs, "doc_id", salt=8)),
+         " map-side, so the salted two-phase plan was removed in round 6)",
+         duplicate_keys(docs, "doc_id")),
         ("n-gram Jaccard with shingle DF cap (bounded self-join buckets: the"
          " dfreq HAVING filter precedes the pair join, so no bucket exceeds"
          " max_shingle_df rows)",

@@ -15,9 +15,9 @@ def recommended_conf(
 ) -> Dict[str, str]:
     """Engine-recommended configs.
 
-    * AQE on (runtime coalescing + skew-join splitting) — the salted
-      uniqueness path and the referential joins rely on it for residual
-      skew beyond the explicit salting.
+    * AQE on (runtime coalescing + skew-join splitting) — the referential
+      anti-joins rely on it for hot foreign keys and to pick broadcast at
+      runtime; no join or aggregation salts its keys or forces a strategy.
     * 128 MB scan partitions keep the flagship check's per-task working
       set (spans arrays + violation buffers) comfortably in executor
       memory at wide schemas.
@@ -47,6 +47,8 @@ def recommended_conf(
         # partition counts (sf1.0 bench suite unchanged). Parameterised
         # off target_partitions, so cluster deployments scale it with
         # their core count rather than inheriting a local constant.
+        # Relies on coalescePartitions staying enabled (set above):
+        # without it every shuffle would run 8x target_partitions tasks.
         conf["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = str(
             8 * target_partitions
         )

@@ -9,7 +9,7 @@ pass/fail verdict per constraint.
 Usage::
 
     suite = ConstraintSuite([
-        Unique("doc_id", salt=16),
+        Unique("doc_id"),
         References(column="media_ref", ref=catalog_df, ref_column="media_ref",
                    explode_from="spans"),
         StatsBounds("offset", min_value=0),
@@ -43,17 +43,16 @@ class TableConstraint:
 
 @dataclass
 class Unique(TableConstraint):
-    """Key uniqueness with optional salted two-phase aggregation."""
+    """Key uniqueness: one single-phase hash aggregation per key."""
 
     column: str
-    salt: int = 0
 
     @property
     def name(self) -> str:
         return f"unique:{self.column}"
 
     def violations(self, df: DataFrame) -> DataFrame:
-        dupes = duplicate_keys(df, self.column, salt=self.salt)
+        dupes = duplicate_keys(df, self.column)
         return dupes.select(
             F.lit(self.name).alias("constraint"),
             F.col(self.column).cast("string").alias("key"),
@@ -63,14 +62,13 @@ class Unique(TableConstraint):
 
 @dataclass
 class References(TableConstraint):
-    """Foreign key must exist in a reference relation (broadcast anti-join
-    for small refs, sort-merge + AQE otherwise)."""
+    """Foreign key must exist in a reference relation (anti-join; the
+    planner/AQE picks broadcast for small refs, shuffled otherwise)."""
 
     column: str
     ref: DataFrame
     ref_column: str
     explode_from: Optional[str] = None  # array<struct> column holding the key
-    broadcast_ref: bool = True
 
     @property
     def name(self) -> str:
@@ -82,9 +80,7 @@ class References(TableConstraint):
             src = df.select(F.explode(self.explode_from).alias("_e")).select(
                 F.col(f"_e.{self.column}").alias(self.column)
             )
-        orphans = orphan_keys(
-            src, self.column, self.ref, self.ref_column, self.broadcast_ref
-        )
+        orphans = orphan_keys(src, self.column, self.ref, self.ref_column)
         return orphans.select(
             F.lit(self.name).alias("constraint"),
             F.col(self.column).cast("string").alias("key"),

@@ -294,7 +294,7 @@ class ValidationEngine:
             ).otherwise(F.coalesce(raw, F.lit(-1)))
         else:
             part = deterministic_partition_id(F.col(self.id_col), self.buckets)
-        annotated = plan.check(df, adapt=adapt, violations=True).withColumn(
+        annotated = plan.check(df, adapt=adapt).withColumn(
             "_part_id", part
         )
         return CheckReport(

@@ -1,21 +1,18 @@
 """Referential-integrity constraints as anti-joins.
 
-Join strategy (round 6, measured): ``broadcast_ref=None`` (the default)
-lets Spark pick — small references broadcast via the static estimate or
-AQE's runtime rewrite; large ones take a shuffled-hash/sort-merge join
-with AQE skew splitting. Forcing a broadcast of a multi-million-key
-reference builds the hash relation single-threaded on the driver:
-at 2M docs / ~7M distinct refs the forced broadcast anti-join ran 5.5s
-vs 1.3s for the planner-chosen shuffled-hash join (local[32],
-tools/referential_experiment.py), so the hint is now opt-in
-(``broadcast_ref=True``) for callers who know their reference is small
-but mis-estimated. The violating side is always the fact table: rows
-whose foreign key has no match in the reference relation.
+Join strategy: the planner/AQE picks it from actual sizes. A reference
+under ``recommended_conf``'s 64 MB ``autoBroadcastJoinThreshold``
+broadcasts (static estimate or AQE's runtime rewrite); a larger one takes
+a shuffled-hash/sort-merge join, and AQE skew-join splitting handles hot
+foreign keys. No broadcast is forced: a forced broadcast of a
+multi-million-key reference builds the hash relation single-threaded on
+the driver — at 2M docs / ~7M distinct refs the forced broadcast
+anti-join ran 5.5s vs 1.3s for the planner-chosen shuffled-hash join
+(local[32], OPTIMIZATION_r06.md). The violating side is always the fact
+table: rows whose foreign key has no match in the reference relation.
 """
 
 from __future__ import annotations
-
-from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,64 +23,16 @@ def orphan_rows(
     fact_key: str,
     ref: DataFrame,
     ref_key: str,
-    broadcast_ref: Optional[bool] = None,
 ) -> DataFrame:
     """Fact rows whose ``fact_key`` does not exist in ``ref.ref_key``.
 
     NULL foreign keys are not orphans (SQL semantics: nothing to refer to);
     use a NonNullable column check for null enforcement.
-
-    ``broadcast_ref``: ``None`` (default) lets the planner/AQE choose the
-    join strategy from actual sizes; ``True`` forces a broadcast (only for
-    references known small but badly estimated). The result set is
-    identical either way.
     """
     r = ref.select(F.col(ref_key).alias("__ref_key")).distinct()
-    if broadcast_ref:
-        r = F.broadcast(r)
     return fact.filter(F.col(fact_key).isNotNull()).join(
         r, F.col(fact_key) == F.col("__ref_key"), "left_anti"
     )
-
-
-def salted_orphan_rows(
-    fact: DataFrame,
-    fact_key: str,
-    ref: DataFrame,
-    ref_key: str,
-    salt: int = 16,
-) -> DataFrame:
-    """Skew-proof anti-join for a NON-broadcastable reference: the fact
-    side gets a per-row salt, the reference side is exploded ``salt``
-    ways, and the join keys on (key, salt) — a hot foreign key (one
-    doc_id prefix holding 10^8 rows) spreads over ``salt`` reducers
-    instead of melting one.
-
-    Use when the reference is too large to broadcast AND the fact keys
-    are skewed beyond what AQE's skew-join splitting handles (AQE splits
-    by partition size after the fact; explicit salting bounds the
-    partition up front). Cost: |ref| × salt shuffle rows on the reference
-    side — acceptable when |ref| ≪ |fact|, which is the referential-check
-    shape.
-    """
-    salted_fact = fact.filter(F.col(fact_key).isNotNull()).withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt)).cast("int"),
-    )
-    exploded_ref = (
-        ref.select(F.col(ref_key).alias("__ref_key"))
-        .distinct()
-        .select(
-            "__ref_key",
-            F.explode(F.sequence(F.lit(0), F.lit(salt - 1))).alias("__salt"),
-        )
-    )
-    return salted_fact.join(
-        exploded_ref,
-        (F.col(fact_key) == F.col("__ref_key"))
-        & (salted_fact["__salt"] == exploded_ref["__salt"]),
-        "left_anti",
-    ).drop("__salt")
 
 
 def orphan_keys(
@@ -91,7 +40,6 @@ def orphan_keys(
     fact_key: str,
     ref: DataFrame,
     ref_key: str,
-    broadcast_ref: Optional[bool] = None,
 ) -> DataFrame:
     """Distinct violating keys with occurrence counts (smaller output than
     :func:`orphan_rows` — aggregate first, then anti-join the distinct
@@ -99,14 +47,11 @@ def orphan_keys(
 
     The aggregation partitions the fact side by ``fact_key`` — exactly the
     anti-join's key — so a shuffled-hash/sort-merge join reuses that
-    exchange and only the reference side moves; ``broadcast_ref`` as in
-    :func:`orphan_rows` (default: planner/AQE decides)."""
+    exchange and only the reference side moves."""
     keys = (
         fact.filter(F.col(fact_key).isNotNull())
         .groupBy(fact_key)
         .agg(F.count(F.lit(1)).alias("n_rows"))
     )
     r = ref.select(F.col(ref_key).alias("__ref_key")).distinct()
-    if broadcast_ref:
-        r = F.broadcast(r)
     return keys.join(r, F.col(fact_key) == F.col("__ref_key"), "left_anti")

@@ -12,8 +12,7 @@ OPTIMIZATION_r06.md): on 2M docs the salted two-phase plan ran 1.15s vs
 0.52s single-phase; on an adversarial 20M-row corpus with ONE key holding
 10M duplicates it ran 1.91s vs 0.87s — the salt loses even on the exact
 skew it was designed for, because partial aggregation already collapsed
-the hot key map-side. ``salt`` is kept for API compatibility and routes to
-the same single-phase plan (results are identical by construction).
+the hot key map-side. There is one plan; ``salt`` selects nothing.
 
 Salting remains the right tool for aggregates WITHOUT compact partial
 state (collect_list/collect_set per key) — see
@@ -34,9 +33,8 @@ def duplicate_keys(
 ) -> DataFrame:
     """Keys appearing ``>= min_count`` times → (key, dup_count).
 
-    ``salt`` is accepted for backward compatibility but no longer selects
-    a different plan: the single-phase hash aggregation dominates the old
-    salted two-phase plan at every measured skew level (module docstring).
+    ``salt`` is accepted and ignored, only because ``bench.py`` (whose
+    timed calls are kept fixed across versions) passes ``salt=16``.
     """
     totals = df.groupBy(key).agg(F.count(F.lit(1)).alias("dup_count"))
     return totals.filter(F.col("dup_count") >= min_count)

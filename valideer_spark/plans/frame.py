@@ -9,13 +9,13 @@ equivalent of the reference's ``validate(value)`` over a JSON object
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any, Optional
+from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..core.registry import Validator, parse
-from .lowering import Lowered, lower
+from .lowering import VIOLATION_TYPE, Lowered, _count_of, lower
 
 
 # engine-reserved column names never treated as document properties: a
@@ -60,77 +60,45 @@ class FramePlan:
         """int — exactly ``size(violations_col(df))``, computed natively
         without materializing the violation structs (no value reprs or
         message formatting)."""
-        from .lowering import _count_of
-
         return _count_of(self.lowered)(_row_struct(df))
 
     def adapted_col(self, df: DataFrame) -> Column:
         """Adapted document struct (defined where the row is valid)."""
         return self.lowered.adapt(_row_struct(df))
 
-    def check(
-        self, df: DataFrame, adapt: bool = True, violations: bool = True
-    ) -> DataFrame:
-        """Annotate ``df`` with `_valid`, `_violations` (+ `_adapted`).
+    def check(self, df: DataFrame, adapt: bool = True) -> DataFrame:
+        """Annotate ``df`` with `_valid`, `_violations`, `_n_violations`
+        (+ `_adapted`).
 
         The violation-building expression tree is far heavier than the
         predicate (value reprs, message formatting), so it is guarded
-        behind the predicate; for the scale path prefer ``violations=False``
-        here and :meth:`violation_rows`, which rebuilds violations only on
-        the (rare) failing rows after the cheap predicate filter.
+        behind the predicate: valid rows never build it.
         """
         row = _row_struct(df)
         out = df.withColumn("_valid", self.lowered.predicate(row))
-        if violations:
-            out = out.withColumn(
-                "_violations",
-                F.when(
-                    F.col("_valid"), F.array().cast(self.violations_schema())
-                ).otherwise(self.lowered.violations(row, F.lit(""))),
-            )
-            # native violation COUNT (== size(_violations), asserted by
-            # tests/test_violation_count.py) without building the
-            # repr-heavy violation structs: verdict aggregations read this
-            # column, so Catalyst prunes _violations out of the verdict
-            # plan entirely and invalid rows stay cheap on that path
-            out = out.withColumn(
-                "_n_violations",
-                F.when(F.col("_valid"), F.lit(0)).otherwise(
-                    self.violation_count_col(df)
-                ),
-            )
+        out = out.withColumn(
+            "_violations",
+            F.when(F.col("_valid"), F.array().cast(VIOLATION_TYPE)).otherwise(
+                self.lowered.violations(row, F.lit(""))
+            ),
+        )
+        # native violation COUNT (== size(_violations), asserted by
+        # tests/test_violation_count.py) without building the
+        # repr-heavy violation structs: verdict aggregations read this
+        # column, so Catalyst prunes _violations out of the verdict
+        # plan entirely and invalid rows stay cheap on that path
+        out = out.withColumn(
+            "_n_violations",
+            F.when(F.col("_valid"), F.lit(0)).otherwise(
+                self.violation_count_col(df)
+            ),
+        )
         if adapt:
             out = out.withColumn(
                 "_adapted",
                 F.when(F.col("_valid"), self.lowered.adapt(row)),
             )
         return out
-
-    def violations_schema(self):
-        from .lowering import VIOLATION_TYPE
-
-        return VIOLATION_TYPE
-
-    def violation_rows(
-        self, df: DataFrame, id_cols: Optional[list[str]] = None
-    ) -> DataFrame:
-        """Exploded violation rows: one row per (document, violation)."""
-        id_cols = id_cols or [df.columns[0]]
-        # two-pass: cheap predicate over everything, heavy violation
-        # construction only on the failing slice
-        annotated = self.check(df, adapt=False, violations=False)
-        bad = annotated.filter(~F.col("_valid")).drop("_valid")
-        bad = self.check(bad, adapt=False, violations=True)
-        exploded = bad.select(
-            *id_cols, F.posexplode("_violations").alias("violation_index", "v")
-        )
-        return exploded.select(
-            *id_cols,
-            "violation_index",
-            F.col("v.path").alias("path"),
-            F.col("v.constraint").alias("constraint"),
-            F.col("v.message").alias("message"),
-        )
 
 
 def compile_plan(schema: Any, df_or_schema) -> FramePlan:

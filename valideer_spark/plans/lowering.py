@@ -73,13 +73,6 @@ class LoweringError(Exception):
     """A validator cannot be lowered against the given Spark type."""
 
 
-# kill switch for the struct-of-arrays sequence fast path (predicate
-# evaluation falls back to the array-of-structs forall when False) —
-# semantics are identical either way; tests flip this to cross-check the
-# two evaluation strategies on randomized inputs
-SOA_ENABLED = True
-
-
 #: one struct-of-arrays check: (field names its builder reads, builder).
 #: The builder receives one Column per field — the per-ELEMENT field value,
 #: bound as a lambda variable over the extracted field array — and returns a
@@ -1378,7 +1371,7 @@ def _lower_homogeneous_sequence(v: K.HomogeneousSequence, dtype: T.DataType) -> 
     )
 
     def predicate(col: Column) -> Column:
-        if use_soa and SOA_ENABLED:
+        if use_soa:
             return own.predicate(col) & _soa_forall(col, item.soa_checks)
         return own.predicate(col) & _nullsafe(
             F.forall(col, lambda x: item.predicate(x))

@@ -214,11 +214,11 @@ FROM verdicts GROUP BY part_id ORDER BY part_id
 
 
 def q_uniqueness_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted two-phase uniqueness over BOTH key shapes in one gate
+    """Single-phase uniqueness over BOTH key shapes in one gate
     (merged docs_uniqueness + orders_uniqueness, r5): the synthetic docs
     frame's string key and the orders table's numeric key with seeded
     read-time duplicates (keys divisible by 97 re-appended)."""
-    d = duplicate_keys(_docs(spark), "doc_id", salt=8).select(
+    d = duplicate_keys(_docs(spark), "doc_id").select(
         F.lit("docs").alias("source"),
         F.col("doc_id").cast("string").alias("key"),
         "dup_count",
@@ -227,7 +227,7 @@ def q_uniqueness_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_dupes = orders.select("o_orderkey").unionAll(
         orders.select("o_orderkey").filter(F.col("o_orderkey") % 97 == 0)
     )
-    o = duplicate_keys(with_dupes, "o_orderkey", salt=8).select(
+    o = duplicate_keys(with_dupes, "o_orderkey").select(
         F.lit("orders").alias("source"),
         F.col("o_orderkey").cast("string").alias("key"),
         "dup_count",
@@ -1265,7 +1265,7 @@ def q_constraint_suite_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog = synth_media_catalog(spark, FLAGSHIP_N_DOCS)
     suite = ConstraintSuite(
         [
-            Unique("doc_id", salt=8),
+            Unique("doc_id"),
             References(
                 column="media_ref", ref=catalog, ref_column="media_ref",
                 explode_from="spans",
